@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.cell.Grid
 
@@ -65,6 +65,13 @@ class ElementStore(spark: SparkSession, path: String,
    * carry cx/cy (point-ish centroid meters). Returns the DIRTY block ids
    * (batch blocks ∪ previous blocks of moved keys) — the caller's recompute
    * frontier.
+   *
+   * Per-batch work: the deduplicated batch is cached, and one aggregate over
+   * it yields its row count, blocks and touched index buckets (an empty batch
+   * returns here, before any other job). An existing store then answers one
+   * lookup of the batch keys' previous blocks in the touched index buckets,
+   * and takes two writes: the dirty data blocks, whose surviving blocks are
+   * observed during that write, and the touched index buckets.
    */
   def merge(name: String, keyCols: Seq[String], batch: DataFrame,
             recencyCol: Option[String] = None): Seq[Long] = {
@@ -73,7 +80,7 @@ class ElementStore(spark: SparkSession, path: String,
     // removes OLD rows, so an un-deduped batch would write duplicate key rows
     // (ADVICE r2). Keep exactly one row per key — by `recencyCol` desc when
     // the caller has one, else an arbitrary-but-single representative
-    // (dropDuplicates), matching the index-side dedup rule.
+    // (dropDuplicates). Everything below relies on `b` being one row per key.
     val b0 = batch.withColumn("cb", blockCol(col("cx"), col("cy")))
     val bd = recencyCol match {
       case Some(rc) =>
@@ -84,81 +91,73 @@ class ElementStore(spark: SparkSession, path: String,
       case None => b0.dropDuplicates(keyCols)
     }
     val b = bd.cache()
+    try mergeDeduped(name, keyCols, b) finally b.unpersist()
+  }
+
+  private def mergeDeduped(name: String, keyCols: Seq[String], b: DataFrame): Seq[Long] = {
     val keyHash = pmod(xxhash64(keyCols.map(col): _*), lit(idxBuckets.toLong)).cast("int")
-    val bKeys = b.select(keyCols.map(col): _*).distinct().cache()
-
-    val first = !exists(name)
-    if (!first) ensureIndex(name, keyCols)
-    val dirtyBlocks: Seq[Long] =
-      if (first) b.select("cb").distinct().collect().map(_.getLong(0)).toSeq
-      else {
-        // previous locations of the batch's keys, via the touched index buckets
-        val touchedKb = bKeys.select(keyHash.as("kb")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val idx = spark.read.parquet(idxPath(name)) // ensureIndex guarantees it
-          .withColumn("cb", col("cb").cast("long"))
-          .filter(col("kb").isin(touchedKb: _*))
-        val oldBlocks = idx.join(bKeys, keyCols, "left_semi")
-          .select("cb").distinct().collect().map(_.getLong(0))
-        (b.select("cb").distinct().collect().map(_.getLong(0)) ++ oldBlocks).distinct.toSeq
-      }
-
+    val summary = b.agg(count(lit(1)), collect_set(col("cb")), collect_set(keyHash))
+      .collect()(0)
     // An EMPTY batch must not touch the store: a zero-row first write would
     // leave a parquet dir with only _SUCCESS, making exists() true while
     // read() fails on schema inference (ADVICE r2) — skip both writes and
     // leave the store uninitialized (or untouched).
-    if (dirtyBlocks.isEmpty) { b.unpersist(); bKeys.unpersist(); return Nil }
+    if (summary.getLong(0) == 0L) return Nil
+    val batchBlocks = summary.getSeq[Long](1).toSeq
+    val touchedKb = summary.getSeq[Int](2).toSeq
+    val bKeys = b.select(keyCols.map(col): _*)
+
+    val first = !exists(name)
+    if (!first) ensureIndex(name, keyCols)
+    val idxNew = b.select((keyCols.map(col) :+ col("cb")): _*).withColumn("kb", keyHash)
+    // Both layers are read with the batch's own schema: the merge writes
+    // exactly these columns back, and a given schema spares the
+    // schema-inference job a plain parquet read starts.
+    def idxTouched: DataFrame = spark.read.schema(idxNew.schema)
+      .parquet(idxPath(name)) // ensureIndex guarantees it
+      .filter(col("kb").isin(touchedKb: _*))
+    val dirtyBlocks: Seq[Long] =
+      if (first) batchBlocks
+      else {
+        // previous locations of the batch's keys, via the touched index buckets
+        val oldBlocks = idxTouched.join(bKeys, keyCols, "left_semi")
+          .select("cb").distinct().collect().map(_.getLong(0))
+        (batchBlocks ++ oldBlocks).distinct
+      }
 
     // --- data merge: read ONLY dirty blocks, drop batch keys, add batch ---
-    val dataCols = b.columns.map(col)
-    val out =
-      if (first) b
-      else read(name, Some(dirtyBlocks))
+    if (first) writeData(name, b)
+    else {
+      // the blocks that keep at least one row, observed while they are written
+      val survivors = Observation()
+      writeData(name, spark.read.schema(b.schema).parquet(dataPath(name))
+        .filter(col("cb").isin(dirtyBlocks: _*)) // partition pruning
         .join(bKeys, keyCols, "left_anti")
-        .select(dataCols: _*)
-        .unionByName(b.select(dataCols: _*))
-    // enumerate surviving blocks BEFORE the overwrite — `out` is a lazy plan
-    // over the files the write replaces
-    val written =
-      if (first) Set.empty[Long]
-      else out.select("cb").distinct().collect().map(_.getLong(0)).toSet
-    out.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cb").parquet(dataPath(name))
-    // a dirty block whose last row vanished is absent from `out` and thus not
-    // overwritten — clear its directory explicitly (Iceberg MERGE would)
-    if (!first) {
+        .unionByName(b)
+        .observe(survivors, collect_set(col("cb")).as("blocks")))
+      val written = survivors.get("blocks").asInstanceOf[scala.collection.Seq[Long]].toSet
+      // a dirty block whose last row vanished is absent from the write and
+      // thus not overwritten — clear its directory explicitly (Iceberg MERGE
+      // would)
       dirtyBlocks.filterNot(written).foreach { cb =>
-        val dir = java.nio.file.Paths.get(dataPath(name), s"cb=$cb")
-        if (java.nio.file.Files.exists(dir)) {
-          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.delete(p))
-        }
+        MatchStore.deleteRecursively(java.nio.file.Paths.get(dataPath(name), s"cb=$cb"))
       }
     }
 
     // --- index merge: same pattern over the narrow (key -> cb) table ---
-    val idxNew = b.select((keyCols.map(col) :+ col("cb")): _*)
-      .dropDuplicates(keyCols)
-      .withColumn("kb", keyHash)
     val idxOut =
       if (first) idxNew
-      else {
-        val touchedKb = idxNew.select("kb").distinct().collect().map(_.getInt(0)).toSeq
-        spark.read.parquet(idxPath(name)) // ensureIndex guarantees existence
-          .filter(col("kb").isin(touchedKb: _*))
-          .withColumn("cb", col("cb").cast("long"))
-          .join(bKeys, keyCols, "left_anti")
-          .select(idxNew.columns.map(col): _*)
-          .unionByName(idxNew)
-      }
+      else idxTouched.join(bKeys, keyCols, "left_anti").unionByName(idxNew)
     idxOut.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("kb").parquet(idxPath(name))
-
-    b.unpersist(); bKeys.unpersist()
     dirtyBlocks
   }
+
+  private def writeData(name: String, out: DataFrame): Unit =
+    out.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cb").parquet(dataPath(name))
 
   /** Crash-recovery: a failure between merge's data write and index write
     * leaves data without an index — the old readOrEmpty fallback then threw

@@ -79,7 +79,10 @@ object MatchEngine {
         * read the materialized blocks. Unlike the lazy cache this cannot
         * race across the concurrently-started consumer stages (the fill is
         * a blocking job), and unlike matched0 it stores only the output
-        * columns. The disk-backed analog of the reference's mv_match_*.
+        * columns. An executor-local (non-reliable) materialization: the
+        * blocks live in each executor's block manager (memory, spilling to
+        * local disk) and are lost with the executor, unlike the reference's
+        * durable mv_match_*.
         * Applied only when the anti leg would reuse matched0 anyway (same
         * spec/keys, no muni guard); other configs fall through unchanged. */
       checkpointCandidates: Boolean = false)

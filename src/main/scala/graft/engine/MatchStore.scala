@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
@@ -12,7 +12,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  *  - rows are bucketed by a coarse spatial range (100 km grid cell of the
  *    feature centroid) and written with dynamic partition overwrite, so
  *    recomputing ONE range replaces exactly that range's files;
- *  - `_metrics/<version>.json` records per-range row counts + lineage;
+ *  - `_metrics/<version>.json` records per-range row counts (from the
+ *    written files' parquet footers, no Spark job) + lineage;
  *  - `resume(ranges)` re-runs the match restricted to those ranges and
  *    overwrites only them — byte-stable because every stage is deterministic.
  *
@@ -61,17 +62,19 @@ class MatchStore(spark: SparkSession, path: String, rangeCellMeters: Double = 10
     * recompute came out empty is deleted explicitly (dynamic overwrite never
     * touches partitions absent from the written frame). */
   def resume(matchDf: DataFrame, ranges: Seq[Long], lineage: String): Unit = {
-    val df = withRange(matchDf).filter(col("range").isin(ranges: _*)).cache()
-    df.write.mode(SaveMode.Overwrite)
+    // the ranges that kept rows, observed while they are written
+    val written = Observation()
+    withRange(matchDf).filter(col("range").isin(ranges: _*))
+      .observe(written, collect_set(col("range")).as("ranges"))
+      .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("range").parquet(dataPath)
-    val present = df.select("range").distinct().collect().map(_.getLong(0)).toSet
-    df.unpersist()
+    val present = written.get("ranges").asInstanceOf[scala.collection.Seq[Long]].toSet
     ranges.filterNot(present).foreach { r =>
       MatchStore.deleteRecursively(Paths.get(dataPath, s"range=$r"))
     }
-    // metrics over the RESUMED ranges only (partition-pruned) — a resume
-    // must not re-scan the whole store
+    // metrics over the RESUMED ranges only — a resume must not re-scan the
+    // whole store
     writeMetrics(s"$lineage resume=[${ranges.mkString(",")}]", Some(ranges))
   }
 
@@ -87,31 +90,25 @@ class MatchStore(spark: SparkSession, path: String, rangeCellMeters: Double = 10
   /** next sequential metrics version: max existing + 1 (durable across JVM
     * restarts — System.nanoTime has an arbitrary per-JVM origin and would
     * mis-order runs after a restart). */
-  private def nextVersion(): Long = {
-    val dir = Paths.get(path, "_metrics")
-    if (!Files.exists(dir)) 1L
-    else {
-      val st = Files.list(dir) // closed below: Files.list holds an open fd
-      try {
-        var mx = 0L
-        val it = st.iterator()
-        while (it.hasNext) {
-          val n = it.next().getFileName.toString
-          if (n.endsWith(".json"))
-            scala.util.Try(n.stripSuffix(".json").toLong).foreach(v => mx = math.max(mx, v))
-        }
-        mx + 1
-      } finally st.close()
-    }
-  }
+  private def nextVersion(): Long =
+    MatchStore.listDir(Paths.get(path, "_metrics")).flatMap { p =>
+      val n = p.getFileName.toString
+      if (n.endsWith(".json")) n.stripSuffix(".json").toLongOption else None
+    }.foldLeft(0L)(math.max) + 1
 
+  /** `_metrics/<v>.json` with per-range row counts, summed from the parquet
+    * footers of the ranges' files, read directly rather than by a Spark job. */
   private def writeMetrics(lineage: String, only: Option[Seq[Long]] = None): Unit = {
-    val scoped = only match {
-      case Some(rs) => read().filter(col("range").isin(rs: _*))
-      case None     => read()
+    val ranges = only.getOrElse(MatchStore.listDir(Paths.get(dataPath)).flatMap { d =>
+      val n = d.getFileName.toString
+      if (n.startsWith("range=")) n.stripPrefix("range=").toLongOption else None
+    }).sorted
+    val conf = spark.sparkContext.hadoopConfiguration
+    val counts = ranges.flatMap { r =>
+      val dir = Paths.get(dataPath, s"range=$r")
+      if (!Files.isDirectory(dir)) None
+      else Some(s"""{"range":$r,"rows":${MatchStore.parquetRows(dir, conf)}}""")
     }
-    val counts = scoped.groupBy("range").count().collect()
-      .map(r => s"""{"range":${r.getLong(0)},"rows":${r.getLong(1)}}""")
     Files.createDirectories(Paths.get(path, "_metrics"))
     val v = nextVersion()
     Files.write(Paths.get(path, "_metrics", s"$v.json"),
@@ -123,6 +120,24 @@ class MatchStore(spark: SparkSession, path: String, rangeCellMeters: Double = 10
 }
 
 object MatchStore {
+  /** entries of a directory, with the listing stream closed. */
+  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val st = Files.list(dir)
+      try st.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]) finally st.close()
+    }
+
+  /** rows in the parquet files directly under `dir`, from their footers. */
+  private def parquetRows(dir: java.nio.file.Path,
+                          conf: org.apache.hadoop.conf.Configuration): Long =
+    listDir(dir).filter(_.getFileName.toString.endsWith(".parquet")).map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    }.sum
+
   /** recursive delete with the Files.walk stream properly closed. */
   def deleteRecursively(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {

@@ -198,13 +198,18 @@ object Pages {
 
   private val tagMapType = MapType(StringType, StringType, valueContainsNull = true)
 
+  /** pages holding lines of one kind of the grammar above, named by its
+    * prefix (`"OSM "`, `"UPSTREAM "`, `"CHANGESET "`, `"MUNI "`) */
+  def lineKind(prefix: String): Column =
+    col("lang") === "sv" && col("text").startsWith(prefix)
+
   /** osm_element(type, id, tags, geom, cx, cy, is_point).
     * try_cast everywhere: Catalyst may reorder a downstream numeric filter
     * BEFORE the line-type filter, and ANSI-mode cast would then throw on
     * non-feature pages (MUNI/noise rows). */
   def extractOsmElements(pages: DataFrame): DataFrame = {
     val p = pages
-      .filter(col("lang") === "sv" && col("text").startsWith("OSM "))
+      .filter(lineKind("OSM "))
       .withColumn("parts", split(col("text"), " ", 6))
     p.select(
         col("parts")(1).as("type"),
@@ -222,7 +227,7 @@ object Pages {
   /** upstream_item(id, dataset_id, original_id, geometry, original_attributes, cx, cy, is_point) */
   def extractUpstreamItems(pages: DataFrame): DataFrame = {
     val p = pages
-      .filter(col("lang") === "sv" && col("text").startsWith("UPSTREAM "))
+      .filter(lineKind("UPSTREAM "))
       .withColumn("parts", split(col("text"), " ", 6))
     p.select(
         expr("try_cast(parts[1] as long)").as("dataset_id"),
@@ -243,7 +248,7 @@ object Pages {
     * one, so the inert table still scales. */
   def extractChangesets(pages: DataFrame): DataFrame = {
     val p = pages
-      .filter(col("lang") === "sv" && col("text").startsWith("CHANGESET "))
+      .filter(lineKind("CHANGESET "))
       .withColumn("parts", split(col("text"), " ", 6))
     p.select(
         expr("try_cast(parts[1] as long)").as("id"),
@@ -260,7 +265,7 @@ object Pages {
   /** municipality(code, name, geom) */
   def extractMunicipalities(pages: DataFrame): DataFrame = {
     pages
-      .filter(col("lang") === "sv" && col("text").startsWith("MUNI "))
+      .filter(lineKind("MUNI "))
       .withColumn("parts", split(col("text"), " ", 4))
       .select(
         col("parts")(1).as("code"),

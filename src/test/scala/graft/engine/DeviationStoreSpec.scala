@@ -34,6 +34,14 @@ class DeviationStoreSpec extends AnyFunSuite {
       dev(Seq(1L), "T A", desc = "one"), dev(Seq(1L), "T A", desc = "two")))))
     assert(e.getMessage.contains("duplicate uniq-key"), e.getMessage)
     assert(store.views.isEmpty, "the rejected batch must not have committed")
+    // the guard fails inside the write: a clean retry commits version 1 with
+    // exactly its own rows, nothing of the rejected batch's partial write
+    val (ups, del) = store.sync("v", toDf(Seq(dev(Seq(2L), "T B"), dev(Seq(3L), "T C"))))
+    assert((ups, del) == (2L, 0L))
+    assert(store.currentVersion("v") == 1)
+    val ids = store.latestFor("v").collect()
+      .map(_.getAs[scala.collection.Seq[Long]]("upstream_item_ids").head).sorted.toSeq
+    assert(ids == Seq(2L, 3L), s"version 1 holds $ids")
   }
 
   test("sync preserves actions, deletes unactioned, updates in place") {
@@ -130,6 +138,24 @@ class DeviationStoreSpec extends AnyFunSuite {
     val left = store.latest().collect()
     assert(left.length == 1 &&
       left(0).getAs[scala.collection.Seq[Long]]("upstream_item_ids") == Seq(2L))
+  }
+
+  test("syncScoped counts only in-scope rows: out-of-scope old rows are never deleted") {
+    val dir = java.nio.file.Files.createTempDirectory("store5").toString
+    val store = new DeviationStore(spark, dir)
+    store.sync("v", toDf((1L to 6L).map(i => dev(Seq(i), "T"))))
+    // row 3 is user-actioned; rows 5 and 6 lie outside the scope
+    store.commit(store.latest().withColumn("action",
+      when(array_contains(col("upstream_item_ids"), 3L), "fixed")), "test:actions")
+    val scope = Some(col("upstream_item_ids").getItem(0) <= 4L)
+    // in scope: 1 updated, 7 inserted, 2 and 4 vanish, 3 vanishes but is kept
+    val (ups, del) = store.syncScoped("v",
+      toDf(Seq(dev(Seq(1L), "T", desc = "new"), dev(Seq(7L), "T"))), scope)
+    assert((ups, del) == (2L, 2L), s"counts ($ups,$del)")
+    val left = store.latest().collect().map(r =>
+      r.getAs[scala.collection.Seq[Long]]("upstream_item_ids").head ->
+        r.getAs[String]("description")).toMap
+    assert(left == Map(1L -> "new", 3L -> "d", 5L -> "d", 6L -> "d", 7L -> "d"), s"$left")
   }
 
   test("property: random sync sequence with interleaved user actions matches the trigger model") {
