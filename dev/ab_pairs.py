@@ -3,22 +3,28 @@
 
     python3 dev/ab_pairs.py --parent <checkout> --change <checkout> \
         --workload <flagship|replication> [--pairs 10] [--seed 1001] \
-        [--seconds S] [--out runs.jsonl]
+        [--out runs.jsonl]
 
 Runs `perfbench/run.py --trace 0` in two checkouts, one pair per seed
 (seed, seed+1, ...), and alternates which side runs first. Each pair uses the
-same seed on both sides. For every end-to-end metric of the change's
-BENCHMARK.json it prints each side's median and quartiles, the change's
-median relative to the parent's, and the share of pairs the change won (ties
-count for neither side). A metric is marked
+same seed on both sides, and every run lasts the `run_seconds` of the
+change's BENCHMARK.json. For every end-to-end metric of that file it prints
+each side's median and quartiles, the change's median relative to the
+parent's, and the share of pairs the change won (ties count for neither
+side). A metric is marked
 
-  GAIN       when the change won at least 9/10 of the pairs and the medians
-             differ by more than the parent's interquartile distance;
+  UNRESOLVED when either side's interquartile distance is larger than the
+             metric's bound times that side's median, unless every change
+             run beats every parent run: the runs spread too widely to tell;
   REGRESSED  when the change's median is worse than the parent's by more than
-             the metric's bound.
+             the metric's bound;
+  GAIN       when at least 10 pairs ran, the change won at least 9/10 of
+             them, the medians differ by more than the parent's
+             interquartile distance, the metric is not UNRESOLVED, and the
+             change fails no larger share of operations than the parent.
 
-The exit status is 1 when any metric regressed or the change failed more
-operations than the parent, else 0. Each run's result line is appended to
+The exit status is 1 when any metric regressed or is unresolved, or the
+change failed a larger share of operations than the parent, else 0. Each run's result line is appended to
 `--out` when given. Nothing in either checkout is modified beyond what
 run.py itself builds and deletes.
 """
@@ -57,13 +63,11 @@ def main():
     ap.add_argument("--workload", required=True, choices=("flagship", "replication"))
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1001)
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="run length (default: run_seconds of BENCHMARK.json)")
     ap.add_argument("--out", type=Path, default=None)
     args = ap.parse_args()
 
     bench = json.loads((args.change / "BENCHMARK.json").read_text())
-    seconds = args.seconds if args.seconds is not None else bench["run_seconds"]
+    seconds = bench["run_seconds"]
     metrics = bench["end_to_end"]
     runs = {"parent": [], "change": []}
 
@@ -82,6 +86,11 @@ def main():
         print(f"pair {i + 1}/{args.pairs} seed {seed} ({order[0]} first): "
               f"{key} parent {p[key]['value']:.4g} change {c[key]['value']:.4g}",
               file=sys.stderr, flush=True)
+
+    failed = {s: sum(r["failed"] for r in runs[s]) for s in runs}
+    attempted = {s: sum(r["attempted"] for r in runs[s]) for s in runs}
+    fails_more = (failed["change"] * max(attempted["parent"], 1)
+                  > failed["parent"] * max(attempted["change"], 1))
 
     bad = False
     print(f"workload {args.workload}: {args.pairs} pairs, seeds {args.seed}..{args.seed + args.pairs - 1}, "
@@ -103,21 +112,25 @@ def main():
         c1, cm, c3 = quartiles(cv)
         ratio = cm / pm if pm else float("inf")
         better = cm < pm if lower else cm > pm
+        separated = (max(cv) < min(pv)) if lower else (min(cv) > max(pv))
+        unresolved = not separated and ((p3 - p1) > bound * abs(pm) or (c3 - c1) > bound * abs(cm))
         verdicts = []
-        if better and wins >= 0.9 * len(pairs) and abs(cm - pm) > (p3 - p1):
-            verdicts.append("GAIN")
+        if unresolved:
+            verdicts.append(f"UNRESOLVED (IQR above bound {bound:g})")
+            bad = True
         if (cm > pm * (1 + bound)) if lower else (cm < pm * (1 - bound)):
             verdicts.append(f"REGRESSED (bound {bound:g})")
             bad = True
+        if (better and not unresolved and not fails_more and len(pairs) >= 10
+                and wins >= 0.9 * len(pairs) and abs(cm - pm) > (p3 - p1)):
+            verdicts.append("GAIN")
         print(f"{name:<14} {f'{pm:.4g} [{p1:.4g}, {p3:.4g}]':<30} {f'{cm:.4g} [{c1:.4g}, {c3:.4g}]':<30} "
               f"{ratio:>6.3f} {f'{wins}/{len(pairs)}':>6}  {' '.join(verdicts)}")
 
-    failed = {s: sum(r["failed"] for r in runs[s]) for s in runs}
-    attempted = {s: sum(r["attempted"] for r in runs[s]) for s in runs}
     print(f"failed/attempted: parent {failed['parent']}/{attempted['parent']}, "
           f"change {failed['change']}/{attempted['change']}")
-    if failed["change"] * max(attempted["parent"], 1) > failed["parent"] * max(attempted["change"], 1):
-        print("change fails a larger share of operations")
+    if fails_more:
+        print("change fails a larger share of operations: no GAIN counts")
         bad = True
     sys.exit(1 if bad else 0)
 

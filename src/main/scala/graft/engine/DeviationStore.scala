@@ -51,22 +51,12 @@ class DeviationStore(spark: SparkSession, path: String) {
   }
 
   /** views that have at least one committed snapshot */
-  def views: Seq[String] = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) Nil
-    else {
-      val st = Files.list(root) // closed below: holds an open directory fd
-      val it = st.iterator()
-      val b = Seq.newBuilder[String]
-      try while (it.hasNext) {
-        val d = it.next()
-        val n = d.getFileName.toString
-        if (n.startsWith("view=") && Files.exists(d.resolve("_latest")))
-          b += n.stripPrefix("view=")
-      } finally st.close()
-      b.result().sorted
-    }
-  }
+  def views: Seq[String] =
+    MatchStore.listDir(Paths.get(path)).flatMap { d =>
+      val n = d.getFileName.toString
+      if (n.startsWith("view=") && Files.exists(d.resolve("_latest"))) Some(n.stripPrefix("view="))
+      else None
+    }.sorted
 
   private def empty: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

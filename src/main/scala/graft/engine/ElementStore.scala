@@ -96,15 +96,22 @@ class ElementStore(spark: SparkSession, path: String,
 
   private def mergeDeduped(name: String, keyCols: Seq[String], b: DataFrame): Seq[Long] = {
     val keyHash = pmod(xxhash64(keyCols.map(col): _*), lit(idxBuckets.toLong)).cast("int")
-    val summary = b.agg(count(lit(1)), collect_set(col("cb")), collect_set(keyHash))
-      .collect()(0)
+    val summary = b.agg(count(lit(1)), count(col("cb")), collect_set(col("cb")),
+      collect_set(keyHash)).collect()(0)
     // An EMPTY batch must not touch the store: a zero-row first write would
     // leave a parquet dir with only _SUCCESS, making exists() true while
     // read() fails on schema inference (ADVICE r2) — skip both writes and
     // leave the store uninitialized (or untouched).
     if (summary.getLong(0) == 0L) return Nil
-    val batchBlocks = summary.getSeq[Long](1).toSeq
-    val touchedKb = summary.getSeq[Int](2).toSeq
+    // A row without a block (cx/cy NULL, e.g. an unparseable coordinate)
+    // would land in the `cb=__HIVE_DEFAULT_PARTITION__` dir, which no dirty
+    // block set can ever name again, and its NULL index entry would break the
+    // next merge of that key — reject the batch before any write.
+    require(summary.getLong(1) == summary.getLong(0),
+      s"element store '$name': ${summary.getLong(0) - summary.getLong(1)} batch " +
+        "row(s) without a block (NULL cx/cy)")
+    val batchBlocks = summary.getSeq[Long](2).toSeq
+    val touchedKb = summary.getSeq[Int](3).toSeq
     val bKeys = b.select(keyCols.map(col): _*)
 
     val first = !exists(name)

@@ -120,8 +120,9 @@ class MatchStore(spark: SparkSession, path: String, rangeCellMeters: Double = 10
 }
 
 object MatchStore {
-  /** entries of a directory, with the listing stream closed. */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+  /** entries of a directory (none if it is absent), with the listing stream
+    * closed. */
+  private[engine] def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
     if (!Files.isDirectory(dir)) Nil
     else {
       val st = Files.list(dir)

@@ -67,6 +67,33 @@ class ElementStoreSpec extends AnyFunSuite {
       "stale row in the old block must be dropped via the rebuilt index")
   }
 
+  test("a batch with an unparseable coordinate is rejected before any write") {
+    val dir = java.nio.file.Files.createTempDirectory("estore_nullcb").toString
+    val es = new ElementStore(spark, dir, blockMeters = 10000.0)
+    // coordinates arrive as text and are try_cast, as the stream extractors do
+    def parsed(rows: (String, Long, String, String)*) =
+      rows.toDF("type", "id", "x", "y")
+        .withColumn("cx", expr("try_cast(x AS double)"))
+        .withColumn("cy", expr("try_cast(y AS double)"))
+        .drop("x", "y")
+    val bad = parsed(("n", 1L, "5000", "5000"), ("n", 2L, "not-a-number", "5000"))
+    val first = intercept[IllegalArgumentException] { es.merge("elements", Seq("type", "id"), bad) }
+    assert(first.getMessage.contains("without a block"))
+    assert(!es.exists("elements"), "a rejected first batch must not initialize the store")
+
+    es.merge("elements", Seq("type", "id"), parsed(("n", 2L, "5000", "5000")))
+    intercept[IllegalArgumentException] { es.merge("elements", Seq("type", "id"), bad) }
+    val dataDir = java.nio.file.Paths.get(dir, "elements", "data")
+    assert(!java.nio.file.Files.exists(dataDir.resolve("cb=__HIVE_DEFAULT_PARTITION__")))
+    val kept = es.read("elements", None).collect()
+    assert(kept.length == 1 && kept(0).getAs[Long]("id") == 2L && kept(0).getAs[Double]("cx") == 5000.0,
+      "a rejected batch must leave the store as it was")
+    // the key the bad batch named still merges cleanly afterwards
+    es.merge("elements", Seq("type", "id"), parsed(("n", 2L, "105000", "105000")))
+    val moved = es.read("elements", None).collect()
+    assert(moved.length == 1 && moved(0).getAs[Double]("cx") == 105000.0)
+  }
+
   test("a batch with duplicate keys writes exactly one row per key (ADVICE r2)") {
     val dir = java.nio.file.Files.createTempDirectory("estore_dup").toString
     val es = new ElementStore(spark, dir)
